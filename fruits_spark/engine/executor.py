@@ -1,11 +1,22 @@
 """Compile a :class:`~fruits_spark.plan.FruitPlan` into a Spark job.
 
-Hot path = ONE ``mapInPandas`` over the token table: each Arrow batch is
-flattened to ``(values, offsets)``, length-bucketed, and every slice's
-prep -> ISS -> sieve chain runs as vectorized NumPy on 3-D blocks
-(:mod:`fruits_spark.kernels`).  No per-row Python, no shuffle — feature
-extraction is embarrassingly parallel across partitions; the only
-shuffles in an end-to-end job are the rollup ``groupBy`` afterwards.
+One route: ONE ``mapInPandas`` over the token table, one body.  Each
+Arrow batch is cut into sub-batches of a bounded number of points
+(tokens x dims), flattened to Arrow's list layout — ``(values,
+offsets)``, one flat array per dimension, univariate input being a
+one-column list — and every slice's prep -> ISS -> sieve chain runs as
+segmented NumPy ops over the whole sub-batch
+(:func:`compute_features_flat`, :mod:`fruits_spark.kernels.flat`).
+Preparateurs without a segmented kernel run their 3-D kernel per
+equal-length group inside that route (``flat.prep_rows_map``).  No
+per-row Python, no shuffle — feature extraction is embarrassingly
+parallel across partitions; the only shuffles in an end-to-end job are
+the rollup ``groupBy`` afterwards.
+
+:func:`compute_features_block` runs the same plan on one equal-length
+3-D block with the bucketed kernels (:mod:`fruits_spark.kernels.iss`,
+``prep``, ``sieve``).  It is the reference-parity oracle the tests and
+the kernel benchmark call; the extract route never does.
 
 Feature columns come out *wide* (one DoubleType column per feature,
 sanitized names + a label map) so the downstream tier rollup is plain
@@ -27,7 +38,7 @@ from .. import plan as Pl
 from ..kernels import iss as KI
 from ..kernels import prep as KP
 from ..kernels import sieve as KS
-from ..kernels.segments import flatten_lists
+from ..kernels.segments import flatten_lists, flatten_lists_mv, shared_dims
 
 
 def _apply_prep(Z: np.ndarray, p: Pl.Prep) -> np.ndarray:
@@ -163,12 +174,9 @@ def _emit_streams_block(Zp: np.ndarray, specs: tuple, Z_orig=None):
         # cross-word CSE per frequency (coswiss_multi: words sharing a
         # letter prefix share the scan chain, bit-identical results);
         # emission stays word-major, which forces buffering ALL
-        # n_words * n_freqs streams of this spec; callers bound the
-        # block to ~SPARK_GRAFT_TOKEN_BUDGET tokens (extract_features
-        # sub-batches both the flat and multivariate paths), so each
-        # stream is ~1.6 MB at the default budget regardless of the
-        # session's Arrow batch config; each slot is released as soon
-        # as it is consumed so peak decays over the emission
+        # n_words * n_freqs streams of this spec; each slot is
+        # released as soon as it is consumed so peak decays over the
+        # emission
         per_freq = {
             f: KI.coswiss_multi(
                 Zp, [w.matrix for w in spec.words], f,
@@ -270,11 +278,11 @@ def _prep_flat_ok(p: Pl.Prep) -> bool:
 
 
 def plan_is_flat(fplan: Pl.FruitPlan, n_dims: int = 1) -> bool:
-    """True if every op has a flat segmented implementation for an
-    ``n_dims``-dimensional input.  Round 5: multivariate words, NEW/DIM
-    prep wrappers, Custom weightings, and mv arctic-argmax all run flat
-    — the bucketed layout remains only as the parity oracle."""
-    del n_dims  # every op is now dim-agnostic; kept for call stability
+    """True if no op needs the block adapter (``flat.prep_rows_map``):
+    every preparateur, at any NEW/DIM depth, has a segmented kernel.
+    Every plan runs on the flat layout either way; this only says
+    whether some rows take a trip through the 3-D prep kernels."""
+    del n_dims  # every op is dim-agnostic; kept for call stability
     for sl in fplan.slices:
         if any(not _prep_flat_ok(p) for p in sl.preps):
             return False
@@ -290,56 +298,70 @@ def plan_is_flat(fplan: Pl.FruitPlan, n_dims: int = 1) -> bool:
     return True
 
 
-def plan_has_pre(fplan: Pl.FruitPlan) -> bool:
-    return any(
-        sv.params.get("pre") for sl in fplan.slices for sv in sl.sieves
-    )
-
-
-def plan_is_padded_ok(fplan: Pl.FruitPlan) -> bool:
-    """Ops the band-padded ALTERNATIVE layout implements — a strict
-    subset of the flat set (avg/std sieves and plateaus weighting are
-    flat+bucketed only); plans outside it run the flat path even under
-    SPARK_GRAFT_EXEC=padded."""
-    for sl in fplan.slices:
-        if any(sv.kind in ("avg", "std") for sv in sl.sieves):
-            return False
-        if any(p.kind not in _FLAT_PREPS for p in sl.preps):
-            return False  # NEW/DIM (multivariate stages) are flat-only
-        for spec in sl.iss_chain():
-            if isinstance(spec, Pl.CosWISSSpec):
-                if any(w.matrix.shape[1] > 1 for w in spec.words):
-                    return False
-                continue
-            if spec.weighting in ("plateaus", "custom") or spec.argmax:
-                return False
-            if any(w.matrix.shape[1] > 1 for w in spec.words):
-                return False
-    return True
-
-
-def _apply_prep_flat(seg, cols: list, p: Pl.Prep) -> list:
-    """Flat prep on a per-dimension column list -> new column list.
-    Per-dim ops map column-wise (identical calls to the univariate flat
-    path); NEW/DIM wrappers manipulate the list like the bucketed
-    ``new_wrap``/``dim_wrap`` manipulate axis 1."""
+def _apply_prep_flat(seg, cols: list, p: Pl.Prep) -> tuple:
+    """Flat prep on a per-dimension column list -> (geometry, columns).
+    inc/std/nrm have segmented kernels (per-dim ops map column-wise);
+    NEW/DIM wrappers manipulate the list like the bucketed
+    ``new_wrap``/``dim_wrap`` manipulate axis 1; every other prep runs
+    its 3-D kernel per equal-length group (``KF.prep_rows_map``), which
+    returns a new geometry when it changes lengths (``lag``, ``fun``)."""
     from ..kernels import flat as KF
 
-    if p.kind == "new":
+    if p.kind in ("new", "dim"):
         inner = p.params.get("prep")
-        extra = cols if inner is None else _apply_prep_flat(seg, cols, inner)
-        return list(cols) + list(extra)
-    if p.kind == "dim":
-        dims = np.atleast_1d(np.asarray(p.params["dims"], dtype=np.int64))
-        transformed = _apply_prep_flat(
-            seg, [cols[i] for i in dims], p.params["prep"]
-        )
-        rest = [c for i, c in enumerate(cols) if i not in set(dims.tolist())]
-        return rest + list(transformed)
+        if p.kind == "new":
+            picked, rest = cols, cols
+        else:
+            d = len(cols)
+            dims = [int(i) for i in np.atleast_1d(p.params["dims"])]
+            if any(not -d <= i < d for i in dims):
+                raise ValueError(f"DIM dims {dims} out of range for {d} dims")
+            dims = [i % d for i in dims]  # negatives count from the end
+            picked = [cols[i] for i in dims]
+            rest = [c for i, c in enumerate(cols) if i not in dims]
+        if inner is None:
+            return seg, list(rest) + list(picked)
+        inner_seg, transformed = _apply_prep_flat(seg, picked, inner)
+        if inner_seg is not seg:
+            raise ValueError(
+                f"{p.kind.upper()} cannot wrap {inner.kind!r}: it changes "
+                "the series length, so its output does not line up with "
+                "the other dims"
+            )
+        return seg, list(rest) + list(transformed)
     if p.kind == "nrm":
-        return KF.nrm_flat_mv(seg, cols, **p.params)
-    fn = {"inc": KF.inc_flat, "std": KF.std_flat}[p.kind]
-    return [fn(seg, c, **p.params) for c in cols]
+        return seg, KF.nrm_flat_mv(seg, cols, **p.params)
+    if p.kind in ("inc", "std"):
+        fn = KF.inc_flat if p.kind == "inc" else KF.std_flat
+        return seg, [fn(seg, c, **p.params) for c in cols]
+    return KF.prep_rows_map(seg, cols, lambda Z: _apply_prep(Z, p))
+
+
+def _check_slice(sl: Pl.Slice, n_dims: int, resized_by: str | None) -> None:
+    """Reject what the prepared input cannot feed, before any scan: a
+    word over more dims than there are columns (chained levels are
+    univariate), an unknown semiring, and a weighting that reads the
+    original input when a prep changed the series length."""
+    for level, spec in enumerate(sl.iss_chain()):
+        d = n_dims if level == 0 else 1
+        for w in spec.words:
+            if w.matrix.shape[1] > d:
+                raise ValueError(
+                    f"word uses dim {w.matrix.shape[1]} but input has {d}"
+                )
+        if isinstance(spec, Pl.CosWISSSpec):
+            continue
+        if spec.semiring not in ("reals", "arctic", "bayesian"):
+            raise ValueError(f"unknown semiring {spec.semiring!r}")
+        reads_orig = spec.weighting in ("l1", "l2", "custom") and not (
+            spec.weighting_params.get("on_prepared", False)
+        )
+        if resized_by is not None and reads_orig:
+            raise ValueError(
+                f"{spec.weighting} weighting reads the original input, but "
+                f"prep {resized_by!r} changed the series length; set "
+                "on_prepared=True to weight by the prepared series"
+            )
 
 
 def compute_features_flat(
@@ -347,20 +369,32 @@ def compute_features_flat(
 ) -> np.ndarray:
     """Whole-batch feature computation on the flat layout: one set of
     segmented array ops per operator, independent of length diversity
-    (the 100 TB hot path).  ``values`` is one flat float64 array
-    (univariate) or a list of per-dimension flat arrays sharing
-    ``offsets`` (multivariate)."""
+    — the only kernel the extract route calls.  ``values`` is one flat
+    float64 array (univariate) or a list of per-dimension flat arrays
+    sharing ``offsets`` (multivariate).
+
+    Each slice keeps two geometries: the source (the input rows) and
+    the stream (after its preps, which may change lengths).  Coquantile
+    cuts and L1/L2/Custom weightings read the source, integer cuts and
+    everything else the stream — as the bucketed oracle does."""
     from ..kernels import flat as KF
 
-    seg = KF.Seg(offsets)
+    src_seg = KF.Seg(offsets)
     in_cols = values if isinstance(values, list) else [values]
+    if src_seg.total == 0:
+        # every row empty: zero features, as the bucketed oracle gives
+        return np.zeros((src_seg.n, fplan.n_features()), dtype=np.float64)
     src0 = in_cols[0]  # coquantile cuts / L-mass use dim 0 (cache.py:25-40)
-    out = np.empty((seg.n, fplan.n_features()), dtype=np.float64)
+    out = np.empty((src_seg.n, fplan.n_features()), dtype=np.float64)
     col = 0
     for sl in fplan.slices:
-        cols = in_cols
+        seg, cols, resized_by = src_seg, in_cols, None
         for p in sl.preps:
-            cols = _apply_prep_flat(seg, cols, p)
+            prev = seg
+            seg, cols = _apply_prep_flat(seg, cols, p)
+            if seg is not prev and resized_by is None:
+                resized_by = p.kind
+        _check_slice(sl, len(cols), resized_by)
         xp = cols if len(cols) > 1 else cols[0]
         # streams may arrive in trie order; widths are fixed per stream,
         # so each one writes at its plan-order column offset
@@ -370,7 +404,7 @@ def compute_features_flat(
         for si, stream in _emit_streams_flat(seg, xp, sl.iss_chain(), in_cols):
             c = col + si * per_stream
             for sv, w_ in zip(sl.sieves, sieve_widths):
-                feats = _apply_sieve_flat(seg, stream, sv, src0, si)
+                feats = _apply_sieve_flat(seg, stream, sv, src_seg, src0, si)
                 out[:, c:c + w_] = feats
                 c += w_
             seen += 1
@@ -410,8 +444,14 @@ def _lookup_flat(spec: Pl.ISSSpec, seg, xp, orig_cols):
     if spec.weighting == "custom":
         # reference Custom weighting (weighting.py:41-66): arbitrary
         # g(X) on 3-D blocks — re-bucket by length (same grouping as
-        # the bucketed executor, so values match it exactly)
-        return KF.bucketed_rows_map(seg, base_cols, wp["fn"])
+        # the block oracle, so values match it exactly)
+        lk_seg, (lookup,) = KF.prep_rows_map(
+            seg, base_cols,
+            lambda Z: np.asarray(wp["fn"](Z)).reshape(len(Z), 1, -1),
+        )
+        if lk_seg is not seg:
+            raise ValueError("custom weighting must keep the series length")
+        return lookup
     raise ValueError(spec.weighting)
 
 
@@ -742,7 +782,7 @@ def _emit_level_flat_cse_weighted(seg, xp, spec, lookup):
     yield from dfs((), None)
 
 
-def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: np.ndarray,
+def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src_seg, src: np.ndarray,
                       stream_idx: int = 0) -> np.ndarray:
     from ..kernels import flat as KF
 
@@ -758,13 +798,13 @@ def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: np.ndarray,
     norm = p.get("norm", "L2")
     q = _sieve_quantiles(sv, stream_idx)
     if sv.kind in ("npi", "mpi", "xpi", "lpi"):
-        cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src)
+        cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src_seg, src)
         fn = {
             "npi": KF.sieve_npi_flat, "mpi": KF.sieve_mpi_flat,
             "xpi": KF.sieve_xpi_flat, "lpi": KF.sieve_lpi_flat,
         }[sv.kind]
         return fn(seg, stream, cuts, q, inc=p.get("inc", 1))
-    cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src)
+    cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src_seg, src)
     if sv.kind == "end":
         return KF.sieve_end_flat(seg, stream, cuts)
     if sv.kind == "max":
@@ -779,165 +819,6 @@ def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: np.ndarray,
             return KF.sieve_cur_flat(seg, stream, cuts, q)
         fn = KF.sieve_avg_flat if sv.kind == "avg" else KF.sieve_std_flat
         return fn(seg, stream, cuts, q)
-    raise ValueError(sv.kind)
-
-
-def compute_features_padded(
-    values: np.ndarray, offsets: np.ndarray, fplan: Pl.FruitPlan
-) -> np.ndarray:
-    """Band-padded execution (see kernels/padded.py): rows are grouped
-    into power-of-two length bands, each processed as one regular 2-D
-    block — contiguous axis scans, >=50% fill, O(bands) NumPy dispatches.
-    This is the default hot path; results match the flat/bucketed paths
-    (exact on integer domains)."""
-    from ..kernels import padded as KP2
-
-    lengths = np.diff(offsets)
-    n = len(lengths)
-    out = np.zeros((n, fplan.n_features()), dtype=np.float64)
-    bands = KP2.band_of(lengths)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for width in np.unique(bands):
-            rows = np.nonzero(bands == width)[0]
-            X, lens = KP2.pad_rows(values, offsets, rows, int(width))
-            ctx = KP2.PadCtx(X, lens)
-            out[rows] = _features_padded_ctx(ctx, fplan)
-    return np.nan_to_num(out, nan=0.0, posinf=0.0, neginf=0.0)
-
-
-def _features_padded_ctx(ctx, fplan: Pl.FruitPlan) -> np.ndarray:
-    from ..kernels import padded as KP2
-
-    out = np.empty((ctx.n, fplan.n_features()), dtype=np.float64)
-    col = 0
-    for sl in fplan.slices:
-        Xp = ctx.X
-        for p in sl.preps:
-            fn = {"inc": KP2.inc_p, "std": KP2.std_p, "nrm": KP2.nrm_p}[p.kind]
-            Xp = fn(ctx, Xp, **p.params)
-            # keep pads at zero so downstream tail assumptions hold
-            Xp = np.where(ctx.valid, Xp, 0.0)
-        for si, (stream, tail_const) in enumerate(_emit_streams_padded(
-            ctx, Xp, sl.iss_chain(), ctx.X
-        )):
-            for sv in sl.sieves:
-                feats = _apply_sieve_padded(
-                    ctx, stream, sv, ctx.X, tail_const, si
-                )
-                out[:, col:col + feats.shape[1]] = feats
-                col += feats.shape[1]
-    if col != fplan.n_features():
-        raise AssertionError(f"feature accounting: {col} != {fplan.n_features()}")
-    return out
-
-
-def _emit_streams_padded(ctx, Xp: np.ndarray, specs: tuple, X_orig: np.ndarray):
-    """Yield (final stream (n, L), tail_const) for a padded-band chain.
-    Intermediate streams are re-zeroed at pads between levels so the
-    next level's zero-pad invariants hold."""
-    from ..kernels import padded as KP2
-
-    spec = specs[0]
-    if isinstance(spec, Pl.CosWISSSpec):
-        # per-word x per-freq emission (no cross-word CSE in the
-        # alternative layout); the angle grids depend only on freq, so
-        # they are computed once per freq and shared across words.
-        # Tail constancy needs BOTH: non-total (no trailing position
-        # weights) AND non-negative exponents — a negative exponent
-        # turns the zero pads into inf (0**-1), which poisons the tail
-        # (true positions stay correct: pads sit after them in the
-        # row), so such streams take the masked sieve path
-        grids = {f: KP2.coswiss_grids_p(ctx, f) for f in spec.freqs}
-        for w in spec.words:
-            w_tail_ok = not spec.total and bool(np.all(w.matrix >= 0))
-            for f in spec.freqs:
-                stream = KP2.coswiss_p(
-                    ctx, Xp, w.matrix, f,
-                    exponent=spec.exponent, total=spec.total,
-                    grids=grids[f],
-                )
-                if len(specs) == 1:
-                    yield stream, w_tail_ok
-                else:
-                    yield from _emit_streams_padded(
-                        ctx, np.where(ctx.valid, stream, 0.0),
-                        specs[1:], X_orig,
-                    )
-        return
-    lookup = None
-    wp = dict(spec.weighting_params)
-    on_prepared = wp.pop("on_prepared", False)
-    base = Xp if on_prepared else X_orig
-    if spec.weighting == "indices":
-        lookup = KP2.indices_lookup_p(ctx, **wp)
-    elif spec.weighting == "l1":
-        lookup = KP2.l1_lookup_p(ctx, base, **wp)
-    elif spec.weighting == "l2":
-        lookup = KP2.l2_lookup_p(ctx, base, **wp)
-    elif spec.weighting is not None:
-        raise ValueError(spec.weighting)
-    pplan = spec.plan()
-    for wi, w in enumerate(spec.words):
-        depth = pplan.depth(wi) if pplan is not None else 1
-        if depth == 0:
-            continue
-        alpha = (
-            np.array(w.alpha, dtype=np.float32)
-            if spec.weighting is not None else None
-        )
-        streams = KP2.iss_p(
-            ctx, Xp, w.matrix, extended=depth, semiring=spec.semiring,
-            alpha=alpha, lookup=lookup, total=spec.total,
-        )
-        # reals streams over zero pads have constant tails, enabling
-        # mask-free sieves; arctic/bayesian/negative-exponent tails are
-        # not constant -> masked sieve paths
-        tail_const = (
-            spec.semiring == "reals" and bool(np.all(w.matrix >= 0))
-        )
-        for s in range(depth):
-            stream = streams[:, s, :]
-            if len(specs) == 1:
-                yield stream, tail_const
-            else:
-                yield from _emit_streams_padded(
-                    ctx, np.where(ctx.valid, stream, 0.0), specs[1:], X_orig
-                )
-
-
-def _apply_sieve_padded(ctx, stream, sv: Pl.Sieve, src, tail_const: bool,
-                        stream_idx: int = 0):
-    from ..kernels import padded as KP2
-
-    p = sv.params
-    if p.get("pre"):
-        # plans with sieve wrappers are routed to the flat/bucketed
-        # paths by extract_features (plan_has_pre)
-        raise ValueError("pre (INC/INT wrapper) unsupported in padded path")
-    if sv.kind in ("ppv", "cpv"):
-        qs = _ppv_quantiles(sv, stream_idx)
-        if sv.kind == "ppv":
-            return KP2.sieve_ppv_p(
-                ctx, stream, qs, segments=p.get("segments", False),
-                tail_const=tail_const,
-            )
-        return KP2.sieve_cpv_p(ctx, stream, qs, segments=p.get("segments", False))
-    cuts_spec = list(p.get("cuts", [-1]))
-    norm = p.get("norm", "L2")
-    q = _sieve_quantiles(sv, stream_idx)
-    cuts = KP2.resolve_cuts_p(ctx, cuts_spec, norm, src)
-    if sv.kind in ("npi", "mpi", "xpi", "lpi"):
-        return KP2._inc_family_p(ctx, stream, cuts, q, p.get("inc", 1), sv.kind)
-    if sv.kind == "end":
-        return KP2.sieve_end_p(ctx, stream, cuts)
-    if sv.kind == "max":
-        return KP2.sieve_max_p(ctx, stream, cuts, q, tail_const=tail_const)
-    if sv.kind == "min":
-        return KP2.sieve_max_p(
-            ctx, stream, cuts, q, minimum=True, tail_const=tail_const
-        )
-    if sv.kind == "cur":
-        return KP2.sieve_cur_p(ctx, stream, cuts, q)
     raise ValueError(sv.kind)
 
 
@@ -1003,144 +884,43 @@ def extract_features(
     preparateur).
 
     ``multivariate``: ``tokens_col`` holds array<array<double>> (dims x
-    steps) — routed through the length-bucketed 3-D kernels.
+    steps); the non-empty rows of one Arrow batch must share a dim
+    count.  Univariate input runs as a one-column list, so both take the
+    same body: sub-batch, flatten, ``compute_features_flat``, frame.
     """
+    import os
+    import time
+
     fcols = feature_columns(fplan)
     keep_fields = [df.schema[k] for k in keep]
     out_schema = StructType(
         list(keep_fields) + [StructField(c, DoubleType(), False) for c in fcols]
     )
 
-    import os
-
-    flat = plan_is_flat(fplan)
-    # flat segmented is the default hot path (measured ~1.3x faster than
-    # band-padded: padding costs ~1.33x volume + per-band dispatch);
-    # SPARK_GRAFT_EXEC=padded selects the band-padded alternative
-    use_padded = (
-        os.environ.get("SPARK_GRAFT_EXEC", "flat") == "padded"
-        and not plan_has_pre(fplan)
-        and plan_is_padded_ok(fplan)
-    )
-
-    # Bound the per-call block size by token volume, not rows: a foreign
-    # SparkSession (no build_session arrow_batch=512) hands us Spark's
-    # default 10k-row Arrow batches, and CosWISS buffers
-    # n_words * n_freqs streams of (block_rows, l) during word-major
-    # emission — chunking here keeps that peak at the documented
-    # ~token_budget scale regardless of session config (ADVICE r2).
-    mv_token_budget = int(
-        os.environ.get("SPARK_GRAFT_TOKEN_BUDGET", "200000")
-    )
-
-    def _mv_flat_sub_batches(pdf, rows, lengths, n_dims):
-        """Token-budget sub-batching for the mv flat path (budget counts
-        POINTS = tokens * dims so the kernel working set stays constant
-        regardless of dim count)."""
-        pts = lengths * n_dims
-        cum = np.cumsum(pts)
-        start, base = 0, 0
-        for i in range(len(rows)):
-            if cum[i] - base > mv_token_budget and i > start:
-                yield pdf.iloc[start:i], rows[start:i]
-                start, base = i, cum[i - 1]
-        if start < len(rows):
-            yield pdf.iloc[start:], rows[start:]
-
-    def _run_mv_flat(pdf, rows, lengths, n_dims):
-        from ..kernels.segments import flatten_lists_mv
-
-        for sub_pdf, sub_rows in _mv_flat_sub_batches(
-            pdf, rows, lengths, n_dims
-        ):
-            cols, offsets = flatten_lists_mv(sub_rows)
-            if cast_scale is not None:
-                for c in cols:
-                    c *= cast_scale
-            feats = compute_features_flat(cols, offsets, fplan)
-            yield pd.concat(
-                [
-                    sub_pdf[list(keep)].reset_index(drop=True),
-                    pd.DataFrame(feats, columns=fcols, copy=False),
-                ],
-                axis=1,
-            )
-
-    def run_multivariate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = list(pdf[tokens_col])
-            lengths = np.fromiter(
-                (len(r[0]) if len(r) else 0 for r in rows),
-                dtype=np.int64, count=len(rows),
-            )
-            ndims = {len(r) for r in rows if len(r)}
-            if len(ndims) == 1:
-                n_dims = ndims.pop()
-                if plan_is_flat(fplan, n_dims):
-                    if stats is not None:
-                        stats.batches.add(1)
-                        stats.rows.add(len(pdf))
-                        stats.tokens.add(int(lengths.sum()))
-                    yield from _run_mv_flat(pdf, rows, lengths, n_dims)
-                    continue
-            if stats is not None:
-                stats.batches.add(1)
-                stats.rows.add(len(pdf))
-                stats.tokens.add(int(lengths.sum()))
-            feats = np.zeros((len(rows), fplan.n_features()), dtype=np.float64)
-            for ln in np.unique(lengths):
-                idxs = np.nonzero(lengths == ln)[0]
-                if ln == 0:
-                    continue
-                n_dims = len(rows[idxs[0]])
-                chunk = max(1, mv_token_budget // max(1, int(ln) * n_dims))
-                for c0 in range(0, len(idxs), chunk):
-                    sub = idxs[c0:c0 + chunk]
-                    Z = np.array(
-                        [
-                            np.stack(
-                                [
-                                    np.asarray(d, dtype=np.float64)
-                                    for d in rows[i]
-                                ]
-                            )
-                            for i in sub
-                        ]
-                    )
-                    if cast_scale is not None:
-                        Z *= cast_scale
-                    feats[sub] = compute_features_block(Z, fplan)
-            # single-block frame (no per-column inserts: pandas
-            # fragmentation warning + O(cols) block copies on wide plans)
-            out = pd.concat(
-                [
-                    pdf[list(keep)].reset_index(drop=True),
-                    pd.DataFrame(feats, columns=fcols, copy=False),
-                ],
-                axis=1,
-            )
-            yield out
-
-    if multivariate:
-        return df.select(*keep, tokens_col).mapInPandas(
-            run_multivariate, out_schema
-        )
-
-    # Arrow batches are sized in ROWS (512); with long sequences one
-    # batch's token volume would blow the per-core cache working set
-    # (measured: 4096-token docs ran 2.3x slower than 256-token docs at
-    # the same tokens/s budget).  Sub-batch by TOKEN budget so the
-    # kernel working set is constant regardless of document length.
+    # Arrow batches are sized in ROWS (512, or Spark's default 10k on a
+    # foreign session); with long sequences one batch would blow the
+    # per-core cache working set (measured: 4096-token docs ran 2.3x
+    # slower than 256-token docs at the same tokens/s budget), and
+    # CosWISS buffers n_words * n_freqs streams during word-major
+    # emission.  Sub-batch by POINTS (tokens x dims) so the kernel
+    # working set is constant whatever the document length, dim count
+    # or session config.
     token_budget = int(os.environ.get("SPARK_GRAFT_TOKEN_BUDGET", "200000"))
 
     def _sub_batches(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        ntok = pdf[tokens_col].map(len).to_numpy()
-        if ntok.sum() <= token_budget:
+        rows = pdf[tokens_col]
+        if multivariate:
+            d = shared_dims(rows)
+            pts = np.fromiter(
+                (len(r[0]) * d if len(r) else 0 for r in rows),
+                dtype=np.int64, count=len(rows),
+            )
+        else:
+            pts = rows.map(len).to_numpy()
+        if pts.sum() <= token_budget:
             yield pdf
             return
-        cum = np.cumsum(ntok)
+        cum = np.cumsum(pts)
         start = 0
         base = 0
         for i in range(len(pdf)):
@@ -1155,60 +935,36 @@ def extract_features(
         for full_pdf in batches:
             if len(full_pdf) == 0:
                 continue
-            yield from _run_one(full_pdf)
-
-    def _run_one(full_pdf):
-        import time as _time
-
-        for pdf in _sub_batches(full_pdf):
-            t0 = _time.perf_counter() if stats is not None else 0.0
-            values, offsets = flatten_lists(pdf[tokens_col])
-            if stats is not None:
-                stats.batches.add(1)
-                stats.rows.add(len(pdf))
-                stats.tokens.add(int(offsets[-1]))
-                stats.flatten_us.add(
-                    int((_time.perf_counter() - t0) * 1e6)
+            for pdf in _sub_batches(full_pdf):
+                t0 = time.perf_counter()
+                if multivariate:
+                    cols, offsets = flatten_lists_mv(list(pdf[tokens_col]))
+                else:
+                    values, offsets = flatten_lists(pdf[tokens_col])
+                    cols = [values]
+                t1 = time.perf_counter()
+                if cast_scale is not None:
+                    for c in cols:
+                        c *= cast_scale
+                feats = compute_features_flat(cols, offsets, fplan)
+                t2 = time.perf_counter()
+                # single-block frame (no per-column inserts: pandas
+                # fragmentation warning + O(cols) block copies on wide
+                # plans)
+                out = pd.concat(
+                    [
+                        pdf[list(keep)].reset_index(drop=True),
+                        pd.DataFrame(feats, columns=fcols, copy=False),
+                    ],
+                    axis=1,
                 )
-                t0 = _time.perf_counter()
-            if cast_scale is not None:
-                values *= cast_scale
-            if flat and use_padded:
-                feats = compute_features_padded(values, offsets, fplan)
-            elif flat:
-                feats = compute_features_flat(values, offsets, fplan)
-            else:
-                lengths = np.diff(offsets)
-                feats = np.zeros(
-                    (len(pdf), fplan.n_features()), dtype=np.float64
-                )
-                for ln in np.unique(lengths):
-                    rows = np.nonzero(lengths == ln)[0]
-                    if ln == 0:
-                        continue
-                    gather = (
-                        offsets[rows][:, None] + np.arange(ln)[None, :]
-                    ).ravel()
-                    Z = values[gather].reshape(len(rows), 1, int(ln))
-                    feats[rows] = compute_features_block(Z, fplan)
-            if stats is not None:
-                stats.kernel_us.add(
-                    int((_time.perf_counter() - t0) * 1e6)
-                )
-                t0 = _time.perf_counter()
-            # single-block frame (no per-column inserts: pandas
-            # fragmentation warning + O(cols) block copies on wide plans)
-            out = pd.concat(
-                [
-                    pdf[list(keep)].reset_index(drop=True),
-                    pd.DataFrame(feats, columns=fcols, copy=False),
-                ],
-                axis=1,
-            )
-            if stats is not None:
-                stats.emit_us.add(
-                    int((_time.perf_counter() - t0) * 1e6)
-                )
-            yield out
+                if stats is not None:
+                    stats.batches.add(1)
+                    stats.rows.add(len(pdf))
+                    stats.tokens.add(int(offsets[-1]))
+                    stats.flatten_us.add(int((t1 - t0) * 1e6))
+                    stats.kernel_us.add(int((t2 - t1) * 1e6))
+                    stats.emit_us.add(int((time.perf_counter() - t2) * 1e6))
+                yield out
 
     return df.select(*keep, tokens_col).mapInPandas(run, out_schema)

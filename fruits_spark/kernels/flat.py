@@ -5,10 +5,13 @@ are exact and simple, but a batch with many distinct sequence lengths
 degenerates into hundreds of tiny NumPy calls.  This module computes the
 same quantities directly on Arrow's flattened list layout — ONE set of
 array ops per operator for the whole batch, independent of how lengths
-are distributed.  This is the engine's hot path for univariate token
-sequences (the 100 TB workload); the bucketed kernels remain as the
-reference-parity implementation, the multivariate path, and the oracle
-for this module's tests.
+are distributed.  It is the engine's only extract route, for univariate
+and multivariate input alike (a multivariate batch is one flat array per
+dimension sharing one :class:`Seg`).  Preparateurs without a segmented
+kernel run through :func:`prep_rows_map`, which hands each equal-length
+group of rows to the 3-D kernel in :mod:`.prep`; beyond that the
+bucketed kernels are the reference-parity oracle for this module's
+tests.
 
 Primitives:
   * segmented cumsum    — global cumsum minus per-segment carry
@@ -229,8 +232,14 @@ def inc_flat(seg: Seg, x: np.ndarray, shift: int = 1, depth: int = 1,
     return out
 
 
-def std_flat(seg: Seg, x: np.ndarray, var: bool = True,
-             eps: float = 1e-5) -> np.ndarray:
+def std_flat(seg: Seg, x: np.ndarray, separately: bool = True,
+             var: bool = True, eps: float = 1e-5, mean: float | None = None,
+             stdev: float | None = None) -> np.ndarray:
+    if not separately:
+        # fitted global statistics: the same expression as prep.std
+        if mean is None or stdev is None:
+            raise ValueError("global STD requires fitted mean/stdev")
+        return (x - mean) / ((stdev if var else 1.0) + eps)
     n = np.maximum(seg.lengths, 1).astype(np.float64)
     mu = seg.sum(x) / n
     # materialize (x - mu_b) ONCE and divide it in place: the naive
@@ -272,20 +281,23 @@ def nrm_flat_mv(seg: Seg, cols, scale_dim: bool = False) -> list:
     return [np.where(zero, 0.0, (c - blo) / bsafe) for c in cols]
 
 
-def bucketed_rows_map(seg: Seg, cols, fn) -> np.ndarray:
+def prep_rows_map(seg: Seg, cols, fn) -> tuple[Seg, list]:
     """Run a 3-D-block callable over a flat batch: rows are grouped by
-    length, ``fn`` gets each group as (n_group, d, l) and must return
-    (n_group, l); results scatter back to one flat (total,) array.
+    length, ``fn`` gets each group as (n_group, d, l) and returns
+    (n_group, d', l'); the groups scatter back to ``d'`` flat columns.
 
-    Escape hatch for per-batch tables the flat layout can't express
-    directly (e.g. a reference Custom weighting ``g(X)``,
-    weighting.py:41-66) — identical grouping to the bucketed executor
-    path, so results match it exactly.  Zero-length rows contribute
-    nothing."""
-    out = np.zeros(seg.total, dtype=np.float64)
-    for ln in np.unique(seg.lengths):
-        if ln == 0:
-            continue
+    This is how preparateurs without a segmented kernel (and a
+    reference Custom weighting ``g(X)``, weighting.py:41-66) run on the
+    flat layout: the grouping is the block oracle's, so every row
+    gets exactly the values the 3-D kernel gives it.  When ``l' != l``
+    (``lag`` gives 2l-1, ``fun`` whatever its callable returns) the
+    result has new offsets; otherwise ``seg`` itself is returned, so a
+    caller can tell a length change by identity.  Zero-length rows stay
+    empty and are never passed to ``fn``."""
+    new_len = np.zeros(seg.n, dtype=np.int64)
+    groups = []
+    d_out = None
+    for ln in np.unique(seg.lengths[seg.nonempty]):
         rows = np.nonzero(seg.lengths == ln)[0]
         gather = (
             seg.offsets[rows][:, None] + np.arange(int(ln))[None, :]
@@ -293,8 +305,31 @@ def bucketed_rows_map(seg: Seg, cols, fn) -> np.ndarray:
         Z = np.stack(
             [c[gather].reshape(len(rows), int(ln)) for c in cols], axis=1
         )
-        out[gather] = np.asarray(fn(Z), dtype=np.float64).ravel()
-    return out
+        Y = np.asarray(fn(Z), dtype=np.float64)
+        if Y.ndim != 3 or Y.shape[0] != len(rows) or (
+            d_out is not None and Y.shape[1] != d_out
+        ):
+            raise ValueError(
+                f"block kernel returned shape {Y.shape} for a "
+                f"{Z.shape} block (other groups gave {d_out} dims)"
+            )
+        d_out = Y.shape[1]
+        new_len[rows] = Y.shape[2]
+        groups.append((rows, Y))
+    if d_out is None:  # every row is empty
+        return seg, [np.empty(0) for _ in cols]
+    if not np.array_equal(new_len, seg.lengths):
+        offsets = np.zeros(seg.n + 1, dtype=np.int64)
+        np.cumsum(new_len, out=offsets[1:])
+        seg = Seg(offsets)
+    out = [np.empty(seg.total, dtype=np.float64) for _ in range(d_out)]
+    for rows, Y in groups:
+        gather = (
+            seg.offsets[rows][:, None] + np.arange(Y.shape[2])[None, :]
+        ).ravel()
+        for k in range(d_out):
+            out[k][gather] = Y[:, k, :].ravel()
+    return seg, out
 
 
 # ---------------------------------------------------------------------------
@@ -974,13 +1009,16 @@ def coswiss_flat_multi_mv(
 # sieves on flat streams
 # ---------------------------------------------------------------------------
 
-def resolve_cuts_flat(seg: Seg, cuts, norm: str, src: np.ndarray) -> np.ndarray:
-    """(n, len(cuts)+1) sorted cut-index matrix; float cuts -> coquantile
-    of the *source* series mass (matches bucketed resolve_cuts)."""
+def resolve_cuts_flat(seg: Seg, cuts, norm: str, src_seg: Seg,
+                      src: np.ndarray) -> np.ndarray:
+    """(n, len(cuts)+1) sorted cut-index matrix, as the bucketed
+    resolve_cuts: float cuts are the coquantile of the *source* series
+    mass (its own geometry ``src_seg``), int cuts count on the stream
+    (``seg``) — the two differ after a length-changing prep."""
     out = np.zeros((seg.n, len(cuts) + 1), dtype=np.int64)
     for i, c in enumerate(cuts):
         if isinstance(c, float):
-            out[:, i + 1] = coquantile_flat(seg, src, c, norm)
+            out[:, i + 1] = coquantile_flat(src_seg, src, c, norm)
         else:
             out[:, i + 1] = c if c >= 0 else seg.lengths + c + 1
     out.sort(axis=1)

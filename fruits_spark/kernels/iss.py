@@ -7,8 +7,9 @@ series (numba ``prange``), every kernel here operates on a regular 3-D
 batch ``Z (n_series, n_dims, length)`` and performs the scans with
 ``axis=-1`` NumPy primitives (``cumsum`` / ``maximum.accumulate``), so an
 entire Arrow batch of equal-length sequences is processed in a handful of
-vectorized ops.  Variable-length batches are handled upstream by length
--bucketing (see :func:`fruits_spark.kernels.segments.run_bucketed`).
+vectorized ops.  The engine's extract route runs the segmented twins in
+:mod:`fruits_spark.kernels.flat`; these kernels are their parity oracle
+(``executor.compute_features_block`` per equal-length group).
 
 All math is float64; words are int32 exponent matrices; weighting lookup
 tables are float64 ``(n, length)`` arrays.
@@ -598,7 +599,7 @@ def _nrm01(x: np.ndarray) -> np.ndarray:
 
 
 def increments(X: np.ndarray, k: int = 1) -> np.ndarray:
-    """k-lag increments along time, zero-padded front (cache.py:8-13)."""
+    """k-lag increments along time, the first k entries zero (cache.py:8-13)."""
     out = np.zeros_like(X, dtype=np.float64)
     out[..., k:] = X[..., k:] - X[..., :-k]
     return out

@@ -65,12 +65,14 @@ def nrm(X: np.ndarray, scale_dim: bool = False) -> np.ndarray:
 
 def mav(X: np.ndarray, width: int) -> np.ndarray:
     """Moving average over trailing window ``width``; first ``width-1``
-    outputs are 0 (transform.py:212-263)."""
+    outputs are 0, so a series shorter than the window is all zeros
+    (transform.py:212-263)."""
     if width <= 0:
         raise ValueError("width must be positive (fit resolves floats)")
     out = np.zeros_like(X, dtype=np.float64)
-    win = np.lib.stride_tricks.sliding_window_view(X, width, axis=-1)
-    out[..., width - 1:] = win.sum(axis=-1) / width
+    if X.shape[-1] >= width:
+        win = np.lib.stride_tricks.sliding_window_view(X, width, axis=-1)
+        out[..., width - 1:] = win.sum(axis=-1) / width
     return out
 
 

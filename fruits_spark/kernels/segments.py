@@ -1,11 +1,10 @@
-"""Variable-length sequence batches: (values, offsets) <-> 3-D blocks.
+"""Variable-length sequence batches -> Arrow's flat list layout.
 
-Arrow hands a pandas UDF a Series of lists.  The hot path converts that to
-one flat float64 ``values`` array plus int64 ``offsets`` (Arrow's own list
-layout), then *buckets rows by length*: every group of equal-length
-sequences is stacked into a regular ``(n_group, d, l)`` block so the ISS /
-prep / sieve kernels run fully vectorized across the group with axis ops.
-Scatter at the end restores input row order.
+Arrow hands a pandas UDF a Series of lists.  The extract route converts
+that to flat float64 ``values`` plus int64 ``offsets`` (Arrow's own list
+layout) — one flat array per dimension for multivariate rows — and every
+operator then runs once over the whole batch as segmented array ops
+(:mod:`fruits_spark.kernels.flat`).
 
 This replaces the reference's numba ``prange`` over series
 (`/root/reference/fruits/iss/semiring.py:184-200`) as the intra-executor
@@ -14,8 +13,6 @@ partitions.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 import numpy as np
 
@@ -31,16 +28,24 @@ def flatten_lists(col) -> tuple[np.ndarray, np.ndarray]:
     return values, offsets
 
 
-def flatten_lists_mv(rows) -> tuple[list, np.ndarray] | tuple[None, None]:
-    """Sequence of (dims, length) nested rows -> (per-dim flat columns,
-    offsets).  All non-empty rows must agree on the dim count; returns
-    (None, None) when they don't (caller falls back to the bucketed
-    path).  Empty rows (0 dims or 0 steps) become empty segments."""
-    n = len(rows)
+def shared_dims(rows) -> int:
+    """The dim count every non-empty (dims, length) row shares; 0 when
+    all rows have 0 dims.  Rows that disagree raise ``ValueError``."""
     ndims = {len(r) for r in rows if len(r)}
-    if len(ndims) != 1:
-        return None, None
-    d = ndims.pop()
+    if len(ndims) > 1:
+        raise ValueError(
+            f"multivariate rows disagree on dim count: {sorted(ndims)}"
+        )
+    return ndims.pop() if ndims else 0
+
+
+def flatten_lists_mv(rows) -> tuple[list, np.ndarray]:
+    """Sequence of (dims, length) nested rows -> (per-dim flat columns,
+    offsets).  All non-empty rows must agree on the dim count (see
+    :func:`shared_dims`).  Empty rows (0 dims or 0 steps) become empty
+    segments; when every row has 0 dims the column list is empty."""
+    n = len(rows)
+    d = shared_dims(rows)
     lengths = np.fromiter(
         (len(r[0]) if len(r) else 0 for r in rows), dtype=np.int64, count=n
     )
@@ -53,52 +58,3 @@ def flatten_lists_mv(rows) -> tuple[list, np.ndarray] | tuple[None, None]:
             for dim in range(d):
                 cols[dim][s:e] = r[dim]
     return cols, offsets
-
-
-def run_bucketed(
-    values: np.ndarray,
-    offsets: np.ndarray,
-    fn: Callable[[np.ndarray], np.ndarray],
-    out_width: int,
-) -> np.ndarray:
-    """Apply ``fn`` on length-bucketed 3-D blocks; return ``(n, out_width)``.
-
-    ``fn`` receives ``Z (n_group, 1, l)`` and must return a per-row 2-D
-    feature block ``(n_group, out_width)``.
-    """
-    n = len(offsets) - 1
-    lengths = np.diff(offsets)
-    out = np.empty((n, out_width), dtype=np.float64)
-    for ln in np.unique(lengths):
-        rows = np.nonzero(lengths == ln)[0]
-        if ln == 0:
-            out[rows] = 0.0
-            continue
-        gather = (offsets[rows][:, None] + np.arange(ln)[None, :]).ravel()
-        Z = values[gather].reshape(len(rows), 1, int(ln))
-        out[rows] = fn(Z)
-    return out
-
-
-def run_bucketed_streams(
-    values: np.ndarray,
-    offsets: np.ndarray,
-    fn: Callable[[np.ndarray], np.ndarray],
-    n_streams: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Like :func:`run_bucketed` but ``fn`` returns per-row *streams*
-    ``(n_group, n_streams, l)``; output is flattened back to
-    (values (n_streams, total_len), offsets) preserving row order."""
-    n = len(offsets) - 1
-    lengths = np.diff(offsets)
-    out_vals = np.empty((n_streams, offsets[-1]), dtype=np.float64)
-    for ln in np.unique(lengths):
-        rows = np.nonzero(lengths == ln)[0]
-        if ln == 0:
-            continue
-        gather = (offsets[rows][:, None] + np.arange(ln)[None, :]).ravel()
-        Z = values[gather].reshape(len(rows), 1, int(ln))
-        streams = fn(Z)  # (n_group, n_streams, ln)
-        for s in range(n_streams):
-            out_vals[s, gather] = streams[:, s, :].ravel()
-    return out_vals, offsets

@@ -64,10 +64,7 @@ def test_chain_equals_manual_composition():
 
 
 def test_univariate_chain_flat_padded_match():
-    from fruits_spark.engine.executor import (
-        compute_features_flat,
-        compute_features_padded,
-    )
+    from fruits_spark.engine.executor import compute_features_flat
 
     chain = (
         ISSSpec((W("[1][11]"),), mode="extended"),
@@ -94,7 +91,4 @@ def test_univariate_chain_flat_padded_match():
 
     np.testing.assert_array_equal(
         compute_features_flat(values, offsets, fplan), expect
-    )
-    np.testing.assert_array_equal(
-        compute_features_padded(values, offsets, fplan), expect
     )

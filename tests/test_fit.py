@@ -98,10 +98,7 @@ def test_fitted_global_std():
 
 
 def test_flat_padded_respect_fitted_values():
-    from fruits_spark.engine.executor import (
-        compute_features_flat,
-        compute_features_padded,
-    )
+    from fruits_spark.engine.executor import compute_features_flat
     from fruits_spark.kernels.segments import flatten_lists
 
     fplan = FruitPlan(
@@ -123,6 +120,30 @@ def test_flat_padded_respect_fitted_values():
     np.testing.assert_allclose(
         compute_features_flat(values, offsets, fitted), expect, rtol=1e-12
     )
+
+
+def test_fitted_global_std_runs_flat():
+    """fit_plan stores global STD as Prep("std", {"separately": False,
+    "mean", "stdev"}); the flat route must apply the fitted statistics
+    like prep.std instead of rejecting the keywords."""
+    from fruits_spark.engine.executor import compute_features_flat, plan_is_flat
+    from fruits_spark.kernels.segments import flatten_lists
+
+    fplan = FruitPlan(
+        (
+            Slice(
+                preps=(Prep("std", {"separately": False}),),
+                iss=ISSSpec((W("[1]"), W("[1][11]")), mode="extended"),
+                sieves=(Sieve("end"), Sieve("max")),
+            ),
+        )
+    )
+    pdf = sample_pdf(30, 20)
+    fitted = fit_plan_pandas(pdf, fplan)
+    assert plan_is_flat(fitted)
+    values, offsets = flatten_lists(pdf["tokens"])
+    X = np.array([t for t in pdf["tokens"]], dtype=np.float64)[:, None, :]
     np.testing.assert_allclose(
-        compute_features_padded(values, offsets, fitted), expect, rtol=1e-12
+        compute_features_flat(values, offsets, fitted),
+        compute_features_block(X, fitted), rtol=1e-9, atol=1e-10,
     )

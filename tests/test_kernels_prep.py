@@ -85,6 +85,12 @@ def test_mav_goldens(x1):
             ]
         ) / 3,
     )
+    # series shorter than the window: every output is one of the first
+    # width-1, so all zeros
+    for length in (1, 2):
+        np.testing.assert_array_equal(
+            P.mav(x1[..., :length], 5), np.zeros((2, 2, length))
+        )
 
 
 def test_lag_golden(x1):

@@ -1,5 +1,5 @@
 """Property-based ISS/sieve tests (hypothesis): on arbitrary integer
-series and arbitrary simple words, the three execution layouts agree
+series and arbitrary simple words, the flat and block layouts agree
 with each other and with an O(l^k) brute-force of the ISS definition
 (iss/iss.py:46 semantics; cf. the reference's own brute-force oracles in
 tests/signature/test_weighting.py)."""
@@ -8,16 +8,15 @@ import itertools
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from fruits_spark.engine.executor import (
     compute_features_block,
     compute_features_flat,
-    compute_features_padded,
 )
 from fruits_spark.kernels.segments import flatten_lists
-from fruits_spark.plan import FruitPlan, ISSSpec, Sieve, Slice
+from fruits_spark.plan import FruitPlan, ISSSpec, Prep, Sieve, Slice
 from fruits_spark.words import W
 
 # univariate words: digits are DIMENSIONS in SimpleWord notation, so
@@ -80,12 +79,10 @@ def test_layouts_agree_and_match_bruteforce(rows, wi, sr):
     )
     values, offsets = flatten_lists(pd.Series(xs))
     ff = compute_features_flat(values, offsets, fplan)
-    fp = compute_features_padded(values, offsets, fplan)
     fb = np.vstack(
         [compute_features_block(x.reshape(1, 1, -1), fplan) for x in xs]
     )
     np.testing.assert_allclose(ff, fb, rtol=1e-9, atol=1e-9)
-    np.testing.assert_allclose(fp, fb, rtol=1e-9, atol=1e-9)
     exps = _word_exps(word)
     for i, x in enumerate(xs):
         expect = brute_iss_end(x, exps, sr)
@@ -132,7 +129,7 @@ def test_sieves_match_numpy_definition(rows, q):
 def test_extended_equals_prefix_singles(rows):
     xs = [np.asarray(r, dtype=np.float64) for r in rows]
     values, offsets = flatten_lists(pd.Series(xs))
-    word = "[1][2][1]"
+    word = "[1][11][1]"
     ext = FruitPlan(
         (
             Slice(
@@ -146,7 +143,7 @@ def test_extended_equals_prefix_singles(rows):
         FruitPlan(
             (Slice(iss=ISSSpec((W(p),)), sieves=(Sieve("end"),)),)
         )
-        for p in ("[1]", "[1][2]", "[1][2][1]")
+        for p in ("[1]", "[1][11]", "[1][11][1]")
     ]
     for j, sp in enumerate(singles):
         fs = compute_features_flat(values, offsets, sp)
@@ -231,3 +228,141 @@ def test_flat_argmax_matches_bucketed(rows, wi, weighting, d):
     ff = compute_features_flat(flat_in, offsets, fplan)
     fb = np.vstack([compute_features_block(b, fplan) for b in blocks])
     np.testing.assert_allclose(ff, fb, rtol=1e-9, atol=1e-9)
+
+
+# --- every prep without a segmented kernel, on the flat layout --------------
+
+def _cumsum_time(X):
+    return np.cumsum(X, axis=-1)
+
+
+def _repeat_time(X):
+    return np.repeat(X, 2, axis=-1)  # length l -> 2l
+
+
+_LEAF_KINDS = (
+    "mav", "mav_dims", "lag", "dot", "win", "cts", "qtc", "ffn", "rin",
+    "rdw", "jld", "spe", "rpe", "dil", "pdd", "fun", "fun_resize",
+)
+_RESIZING = ("lag", "fun_resize")
+
+
+@st.composite
+def _leaf_prep(draw, d, keep_length=False):
+    """(prep, output dim count) for a prep routed through the block
+    adapter, valid on ``d``-dim input."""
+    kinds = [k for k in _LEAF_KINDS if not (keep_length and k in _RESIZING)]
+    kind = draw(st.sampled_from(kinds))
+    rng = np.random.default_rng(draw(st.integers(0, 2**16)))
+    if kind == "mav":
+        return Prep("mav", {"width": draw(st.integers(1, 4))}), d
+    if kind == "mav_dims":
+        return Prep("mav", {"width": -1}), 1
+    if kind == "lag":
+        return Prep("lag"), 2 * d
+    if kind == "dot":
+        return Prep("dot", {"n": draw(st.integers(1, 3))}), d
+    if kind == "win":
+        lo = draw(st.floats(0.0, 0.5))
+        return Prep("win", {"start": lo, "end": lo + 0.4}), d
+    if kind == "cts":
+        return Prep("cts", {"s": 1, "pseudo_shift": draw(st.booleans())}), d
+    if kind == "qtc":
+        return Prep("qtc", {"q_value": draw(st.floats(-1.0, 1.0)),
+                            "lower": draw(st.booleans())}), d
+    if kind == "ffn":
+        o = draw(st.integers(1, 2))
+        return Prep("ffn", {
+            "w1": rng.normal(size=(3, d)), "b1": rng.normal(size=3),
+            "w2": rng.normal(size=(o, 3)), "b2": rng.normal(size=o),
+        }), o
+    if kind == "rin":
+        return Prep("rin", {"kernel": rng.normal(size=draw(st.integers(1, 2)))}), d
+    if kind == "rdw":
+        return Prep("rdw", {"weights": rng.integers(1, 3, size=d).astype(float)}), d
+    if kind == "jld":
+        o = draw(st.integers(1, 3))
+        return Prep("jld", {"proj": rng.normal(size=(o, d))}), o
+    if kind == "spe":
+        return Prep("spe", {
+            "freq": draw(st.floats(0.1, 1.0)),
+            "operation": draw(st.sampled_from(["multiplicative", "additive"])),
+        }), d
+    if kind == "rpe":
+        assume(d % 2 == 0)
+        return Prep("rpe", {"freq": draw(st.floats(0.1, 1.0))}), d
+    if kind == "dil":
+        return Prep("dil", {"indices": rng.integers(0, 6, size=2),
+                            "lengths": rng.integers(1, 3, size=2)}), d
+    if kind == "pdd":
+        return Prep("pdd", {"indices": np.array([1, 4]),
+                            "width": draw(st.integers(1, 2))}), d
+    if kind == "fun":
+        return Prep("fun", {"f": _cumsum_time}), d
+    return Prep("fun", {"f": _repeat_time}), d
+
+
+@st.composite
+def _prep_chain(draw, d):
+    """One or two preps, each bare or wrapped in NEW/DIM; wrapped
+    preps keep the series length (a resized wrapped output cannot line
+    up with the other dims).  Returns (preps, output dim count)."""
+    preps = []
+    for _ in range(draw(st.integers(1, 2))):
+        wrap = draw(st.sampled_from(["bare", "new", "dim"]))
+        if wrap == "bare":
+            p, d = draw(_leaf_prep(d))
+        elif wrap == "new":
+            p, extra = draw(_leaf_prep(d, keep_length=True))
+            p, d = Prep("new", {"prep": p}), d + extra
+        else:
+            dims = draw(st.lists(st.integers(0, d - 1), min_size=1,
+                                 max_size=d, unique=True))
+            # negative indices count from the end, as np.delete does
+            dims = [i - d if draw(st.booleans()) else i for i in dims]
+            p, out = draw(_leaf_prep(len(dims), keep_length=True))
+            p, d = Prep("dim", {"dims": dims, "prep": p}), d - len(dims) + out
+        preps.append(p)
+    return tuple(preps), d
+
+
+@st.composite
+def _adapter_case(draw):
+    d_in = draw(st.integers(1, 2))
+    preps, d = draw(_prep_chain(d_in))
+    words = (W("[1][1]"), W("[11]")) + ((W("[1][2]"),) if d >= 2 else ())
+    fplan = FruitPlan((
+        Slice(
+            preps=preps,
+            iss=ISSSpec(words),
+            # a float cut is resolved on the original input, integer
+            # cuts on the (possibly resized) stream
+            sieves=(Sieve("end", {"cuts": [-1, 0.5]}),
+                    Sieve("max", {"cuts": [-1, 2]})),
+        ),
+    ))
+    lengths = draw(st.lists(st.integers(0, 10), min_size=1, max_size=8))
+    rng = np.random.default_rng(draw(st.integers(0, 2**16)))
+    cols = [rng.uniform(-2.0, 2.0, size=sum(lengths)) for _ in range(d_in)]
+    return fplan, cols, np.array(lengths, dtype=np.int64)
+
+
+@settings(max_examples=80, deadline=None)
+@given(case=_adapter_case())
+def test_adapter_preps_flat_match_block_oracle(case):
+    """Preps without a segmented kernel run on the flat layout through
+    the block adapter: over random lengths (0, 1 and 2 included), 1-D
+    and 2-D input, bare or under NEW/DIM, ``compute_features_flat``
+    equals ``compute_features_block`` run per equal-length group."""
+    fplan, cols, lengths = case
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    ff = compute_features_flat(cols if len(cols) > 1 else cols[0],
+                               offsets, fplan)
+    fb = np.zeros_like(ff)
+    for ln in np.unique(lengths[lengths > 0]):
+        rows = np.nonzero(lengths == ln)[0]
+        gather = (offsets[rows][:, None] + np.arange(ln)[None, :]).ravel()
+        Z = np.stack([c[gather].reshape(len(rows), ln) for c in cols], axis=1)
+        fb[rows] = compute_features_block(Z, fplan)
+    np.testing.assert_allclose(ff, fb, rtol=1e-9, atol=1e-10)

@@ -61,18 +61,18 @@ def test_retire_runs_concurrent_serialize(spark, tmp_path):
 
 
 def test_multivariate_block_chunking_matches_unchunked(spark, monkeypatch):
-    """A tiny token budget forces run_multivariate to chunk each
-    per-length block (bounding CosWISS stream buffering for foreign
-    sessions with big Arrow batches); features must be identical.
+    """A tiny token budget forces extract_features to cut each Arrow
+    batch into one-row sub-batches (bounding CosWISS stream buffering
+    for foreign sessions with big Arrow batches); features must be
+    identical.
 
-    The MAV prep keeps this plan on the BUCKETED mv path (the round-5
-    flat mv path — which by now covers argmax too — would otherwise
-    claim it; its float carry rounding is chunk-boundary-dependent and
-    covered by its own integer-domain chunking test in
-    test_flat_multivariate)."""
+    The DOT prep runs through the block adapter; on integer-valued
+    input every op here is exact, so the float carry rounding that
+    depends on where sub-batches split (kernels/flat.py) cannot show."""
     rng = np.random.default_rng(7)
     rows = [
-        (i, rng.normal(size=(2, 13)).tolist(), "s", 13) for i in range(9)
+        (i, rng.integers(-9, 10, size=(2, 13)).astype(float).tolist(), "s", 13)
+        for i in range(9)
     ]
     df = spark.createDataFrame(
         rows,
@@ -83,7 +83,7 @@ def test_multivariate_block_chunking_matches_unchunked(spark, monkeypatch):
     fplan = FruitPlan(
         (
             Slice(
-                preps=(Prep("mav", {"width": 3}),),
+                preps=(Prep("dot", {"n": 2}),),
                 iss=ISSSpec((W("[1]"), W("[12]"), W("[1][2]"))),
                 sieves=(Sieve("end"), Sieve("max")),
             ),
@@ -648,35 +648,6 @@ def test_extract_features_all_empty_batch(spark):
     out = EX.extract_features(df, fplan).collect()
     assert len(out) == 5
     assert all(r[c] == 0.0 for r in out for c in fcols)
-
-
-def test_padded_coswiss_negative_exponent_matches_flat():
-    """Padded CosWISS with a NEGATIVE exponent word: pads become inf
-    (0**-1) so the tail is poisoned — the emitter must route these
-    streams to masked sieves, matching the flat layout (review
-    finding: tail_const=True read inf tails as data)."""
-    from fruits_spark.engine.executor import (
-        compute_features_flat, compute_features_padded,
-    )
-    from fruits_spark.plan import CosWISSSpec, Sieve, Slice, FruitPlan
-
-    fplan = FruitPlan(
-        (
-            Slice(
-                iss=CosWISSSpec((W("[(-1)][1]"),), (0.5,)),
-                sieves=(Sieve("max"), Sieve("ppv", {"quantiles": [0.0],
-                                                    "constant": [True]})),
-            ),
-        )
-    )
-    rng = np.random.default_rng(4)
-    lens = rng.integers(3, 30, size=12)
-    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
-    # strictly positive values so x**-1 is finite in the true region
-    values = rng.uniform(0.5, 2.0, size=int(offsets[-1]))
-    flat = compute_features_flat(values, offsets, fplan)
-    padded = compute_features_padded(values, offsets, fplan)
-    np.testing.assert_allclose(padded, flat, rtol=1e-9, atol=1e-12)
 
 
 def test_shingle_df_short_docs_emit_no_shingles(spark):

@@ -215,7 +215,7 @@ def test_unweighted_cse_duplicate_words_single_mode():
     np.cumsum(lengths, out=offsets[1:])
     x = rng.normal(size=int(offsets[-1]))
     for extra in ({}, {"weighting": "indices"}):
-        spec = ISSSpec((W("[1][11]"), W("[1][2]"), W("[1][11]")),
+        spec = ISSSpec((W("[1][11]"), W("[1][1]"), W("[1][11]")),
                        mode="single", **extra)
         fplan = FruitPlan((Slice(iss=spec, sieves=(Sieve("end"),)),))
         out = compute_features_flat(x, offsets, fplan)
@@ -316,6 +316,13 @@ def test_all_empty_batch_through_flat_paths(spark, monkeypatch):
     offsets = np.zeros(4, dtype=np.int64)
     out = compute_features_flat(np.array([]), offsets, fplan_uv)
     assert out.shape == (3, 1) and not out.any()
+    # multivariate rows with 0 dims: no columns at all
+    from fruits_spark.kernels.segments import flatten_lists_mv
+
+    cols, offsets = flatten_lists_mv([[], []])
+    assert cols == [] and offsets.tolist() == [0, 0, 0]
+    out = compute_features_flat(cols, offsets, fplan_uv)
+    assert out.shape == (2, 1) and not out.any()
 
     # Spark level: huge doc + trailing empty docs + tiny budget forces
     # an all-empty trailing sub-batch (mv route)
@@ -327,6 +334,8 @@ def test_all_empty_batch_through_flat_paths(spark, monkeypatch):
         (0, [[1.0] * 30, [2.0] * 30], "s", 30),
         (1, [[], []], "s", 0),
         (2, [[], []], "s", 0),
+        (3, [], "s", 0),
+        (4, [], "s", 0),
     ]
     df = spark.createDataFrame(
         rows,
@@ -338,6 +347,6 @@ def test_all_empty_batch_through_flat_paths(spark, monkeypatch):
                          multivariate=True)
         .toPandas().sort_values("doc_id")
     )
-    assert len(out) == 3
+    assert len(out) == 5
     assert out[fc[0]].iloc[0] != 0.0
     assert (out[fc[0]].iloc[1:] == 0.0).all()
